@@ -1,23 +1,28 @@
-/* fasttree — optional C accelerator for the tree builder's in-body hot
- * path (jsoup_spark/parser/treebuilder.py _run loop / _in_body dispatch).
+/* fasttree — optional C accelerator for the tree builder's hot path
+ * (jsoup_spark/parser/treebuilder.py _run loop and mode dispatch), plus
+ * the span walker of extract.spans. No binary is committed: the package
+ * loader (jsoup_spark/_native/__init__.py) compiles this file on first
+ * import into _native/_build/, keyed by a hash of the source.
  *
  * Scope (strict subset; the Python tree builder remains the source of
- * truth and the fallback): while the builder sits in the InBody insertion
- * mode with no tracking / streaming callbacks / custom tagset / foster
- * parenting / active formatting reconstruction pending, apply queued
- * tokens directly:
- *   - Character tokens        -> TextNode append (+ frameset_ok rule)
- *   - start tags              -> p-closer blocks, simple voids, plain
- *                                known/unknown inserts, <li>, param/source/track
- *   - end tags                -> C_END_CLOSERS, </li> </p> </dd> </dt>,
- *                                any-other-end-tag (incl. unknown names)
- * Anything else (formatting tags, table machinery, text-state switches,
- * self-closing flags, NULs in text, depth/ns oddities) returns the token
- * to the Python dispatcher untouched.
+ * truth and the fallback): while the builder sits in a mode listed in
+ * treebuilder._FT_STATES with no tracking / streaming callbacks / custom
+ * tagset / foster parenting pending, apply queued tokens directly:
+ *   - document prelude and head modes, AfterBody/AfterAfterBody endgame
+ *   - InBody: Character tokens, p-closer blocks, simple voids, plain
+ *     known/unknown inserts, <li>, headings, formatting tags, <table>,
+ *     the common end tags (adoption agency only on its trivial paths)
+ *   - InTable/InTableBody/InRow/InCell: section, row and cell starts
+ *     with the implied <tbody>/<tr>, the table end tags, whitespace
+ *     between table tags; cell content goes through the InBody rules
+ * Anything else (foster parenting, non-whitespace table text, caption/
+ * colgroup, templates, self-closing flags on non-voids, NULs in text,
+ * depth/ns oddities) returns the token to the Python dispatcher
+ * untouched.
  *
  * Semantics mirrored 1:1 from treebuilder.py (same error strings, same
- * error-count behavior, same node shapes); validated by the golden-tree
- * and fuzz differential campaigns with the accelerator active.
+ * error-count behavior, same node shapes); checked against the Python
+ * dispatcher by tests/test_tree_differential.py and the golden trees.
  */
 #define PY_SSIZE_T_CLEAN
 #include <Python.h>
@@ -43,6 +48,7 @@
 #define SA_TO_HEAD_EMPTY 11 /* in-body link/meta/...: plain empty insert */
 #define SA_BUTTON 12       /* button: insert unless a button is in scope */
 #define SA_TEXT_SWITCH 13  /* title/script/style/noframes: enter TEXT mode */
+#define SA_TABLE 14        /* <table>: close p (no quirks), insert, InTable */
 
 /* end actions */
 #define EA_BAIL 0
@@ -2655,6 +2661,577 @@ fail:
     return -1;
 }
 
+/* ---- table modes (treebuilder._in_table/_in_table_body/_in_row/_in_cell)
+ * Strict subset: section, row and cell starts with the implied
+ * <tbody>/<tr>, close-cell and clear-stack-to-context, the end tags
+ * </td> </th> </tr> </tbody> </thead> </tfoot> </table>, whitespace
+ * between table tags, comments, and cell content through the InBody
+ * appliers. Foster parenting, non-whitespace table text,
+ * caption/colgroup/col, a nested <table> in InTable, templates, forms,
+ * hidden inputs and raw-text tags stay on the Python path. */
+enum { TN_OTHER, TN_TABLE, TN_TBODY, TN_THEAD, TN_TFOOT, TN_TR, TN_TD,
+       TN_TH, TN_CAPTION, TN_COL, TN_COLGROUP, TN_TEMPLATE, TN_HTML,
+       TN_BODY, TN_SELECT, TN_HEAD, TN_FRAMESET, TN_N };
+static const char *const g_tn_str[TN_N] = {
+    "", "table", "tbody", "thead", "tfoot", "tr", "td", "th", "caption",
+    "col", "colgroup", "template", "html", "body", "select", "head",
+    "frameset"};
+static PyObject *g_tn[TN_N];        /* interned names by id */
+static PyObject *g_tn_ids = NULL;   /* dict: name -> id */
+#define TB(id) (1u << (id))
+#define TS_SECTIONS (TB(TN_TBODY) | TB(TN_THEAD) | TB(TN_TFOOT))
+#define TS_CELLS (TB(TN_TD) | TB(TN_TH))
+#define TS_COLS (TB(TN_CAPTION) | TB(TN_COL) | TB(TN_COLGROUP))
+#define TS_FOSTER (TB(TN_TABLE) | TS_SECTIONS | TB(TN_TR))
+#define TS_STRAY (TB(TN_BODY) | TS_COLS | TB(TN_HTML))
+#define OPT_TABLE_SCOPE 8
+
+/* insertion-mode ids (configure_table) */
+static long g_in_table = -1, g_in_table_body = -1, g_in_row = -1,
+    g_in_cell = -1, g_in_select = -1, g_in_caption = -1,
+    g_in_column_group = -1, g_in_frameset = -1;
+static PyObject *g_err_no_cell = NULL, *g_err_cell_not_in_scope = NULL,
+    *g_err_stray_end = NULL, *g_err_tr_not_in_scope = NULL,
+    *g_err_cell_without_row = NULL, *g_err_body_not_in_table = NULL,
+    *g_err_table_not_in_scope = NULL, *g_err_stray_table_end = NULL;
+
+static int
+is_head_mode(long state)
+{
+    return (g_in_head != -1 &&
+            (state == g_before_head || state == g_in_head ||
+             state == g_after_head || state == g_text_mode)) ||
+           (g_initial != -1 &&
+            (state == g_initial || state == g_before_html ||
+             state == g_after_body || state == g_after_after_body));
+}
+
+static PyObject *
+configure_table(PyObject *self, PyObject *args)
+{
+    PyObject *errs;
+    if (!PyArg_ParseTuple(args, "llllllllO", &g_in_table, &g_in_table_body,
+                          &g_in_row, &g_in_cell, &g_in_select,
+                          &g_in_caption, &g_in_column_group,
+                          &g_in_frameset, &errs))
+        return NULL;
+    if (!PyTuple_Check(errs) || PyTuple_GET_SIZE(errs) != 8) {
+        PyErr_SetString(PyExc_ValueError, "errs must be an 8-tuple");
+        return NULL;
+    }
+    PyObject **dst[8] = {
+        &g_err_no_cell, &g_err_cell_not_in_scope, &g_err_stray_end,
+        &g_err_tr_not_in_scope, &g_err_cell_without_row,
+        &g_err_body_not_in_table, &g_err_table_not_in_scope,
+        &g_err_stray_table_end};
+    for (int i = 0; i < 8; i++) {
+        Py_XDECREF(*dst[i]);
+        *dst[i] = Py_NewRef(PyTuple_GET_ITEM(errs, i));
+    }
+    if (g_tn_ids == NULL) {
+        if ((g_tn_ids = PyDict_New()) == NULL)
+            return NULL;
+        for (int id = 1; id < TN_N; id++) {
+            PyObject *v = PyLong_FromLong(id);
+            g_tn[id] = PyUnicode_InternFromString(g_tn_str[id]);
+            if (v == NULL || g_tn[id] == NULL ||
+                PyDict_SetItem(g_tn_ids, g_tn[id], v) < 0) {
+                Py_XDECREF(v);
+                return NULL;
+            }
+            Py_DECREF(v);
+        }
+    }
+    Py_RETURN_NONE;
+}
+
+static int
+is_table_mode(long state)
+{
+    return g_in_table != -1 &&
+        (state == g_in_table || state == g_in_table_body ||
+         state == g_in_row || state == g_in_cell);
+}
+
+/* table-name id of a tag name; TN_OTHER for the rest, -1 on error */
+static int
+tn_of(PyObject *name)
+{
+    PyObject *v = PyDict_GetItemWithError(g_tn_ids, name);
+    if (v == NULL)
+        return PyErr_Occurred() ? -1 : TN_OTHER;
+    return (int)PyLong_AS_LONG(v);
+}
+
+static int
+tn_el(PyObject *el)
+{
+    PyObject *nm = node_get(el, s_name);
+    if (nm == NULL)
+        return -1;
+    int id = tn_of(nm);
+    Py_DECREF(nm);
+    return id;
+}
+
+static int
+tn_current(Ctx *c)
+{
+    Py_ssize_t n = PyList_GET_SIZE(c->stack);
+    return n ? tn_el(PyList_GET_ITEM(c->stack, n - 1)) : TN_OTHER;
+}
+
+/* clear_stack_to_context(<mask names>, "template") + the implicit html
+ * stop. 1 done, 0 = it would stop at a template (nothing popped; bail),
+ * -1 error. */
+static int
+clear_to_context(Ctx *c, unsigned mask)
+{
+    Py_ssize_t n = PyList_GET_SIZE(c->stack), i;
+    for (i = n - 1; i >= 0; i--) {
+        int id = tn_el(PyList_GET_ITEM(c->stack, i));
+        if (id < 0)
+            return -1;
+        if (id == TN_TEMPLATE)
+            return 0;
+        if (id == TN_HTML || (mask & TB(id)))
+            break;
+    }
+    if (i + 1 < n && PyList_SetSlice(c->stack, i + 1, n, NULL) < 0)
+        return -1;
+    return 1;
+}
+
+static int
+clear_formatting_to_marker(Ctx *c)
+{
+    for (;;) {
+        Py_ssize_t n = PyList_GET_SIZE(c->formatting);
+        if (n == 0)
+            return 0;
+        int marker = PyList_GET_ITEM(c->formatting, n - 1) == Py_None;
+        if (PyList_SetSlice(c->formatting, n - 1, n, NULL) < 0)
+            return -1;
+        if (marker)
+            return 0;
+    }
+}
+
+/* _in_cell end td/th (also process_end from _close_cell) */
+static int
+end_cell(Ctx *c, PyObject *name, long *state)
+{
+    int s = in_scope_walk(c, name, OPT_TABLE_SCOPE);
+    if (s < 0)
+        return -1;
+    *state = g_in_row;
+    if (!s) {
+        err(c, g_err_cell_not_in_scope);
+        return 0;
+    }
+    if (implied_end(c, NULL) < 0)
+        return -1;
+    int cur = current_is(c, name);
+    if (cur < 0)
+        return -1;
+    if (!cur)
+        err(c, g_err_unexpected_open);
+    if (pop_to_close(c, name) < 0)
+        return -1;
+    return clear_formatting_to_marker(c);
+}
+
+/* _close_cell */
+static int
+close_cell(Ctx *c, long *state)
+{
+    int td = in_scope_walk(c, g_tn[TN_TD], OPT_TABLE_SCOPE);
+    if (td < 0)
+        return -1;
+    return end_cell(c, g_tn[td ? TN_TD : TN_TH], state);
+}
+
+/* synthesized start tag (process_start with no attrs) */
+static int
+insert_synth(Ctx *c, int id)
+{
+    int known;
+    long packed = action_of(g_tn[id], &known);
+    if (packed < 0)
+        return -1;
+    PyObject *el = insert_element(c, g_tn[id], PACK_FLAGS(packed), NULL, 1);
+    if (el == NULL)
+        return -1;
+    Py_DECREF(el);
+    return 0;
+}
+
+/* </table> in InTable once the table is in table scope: pop_to_close +
+ * reset_insertion_mode. The new mode is decided on the stack below the
+ * table BEFORE popping, so a template or fragment-context case bails
+ * with nothing changed. 1 done, 0 bail, -1 error. */
+static int
+end_table(Ctx *c, PyObject *tb, long *state)
+{
+    Py_ssize_t n = PyList_GET_SIZE(c->stack), t;
+    for (t = n - 1; t >= 0; t--) {
+        int id = tn_el(PyList_GET_ITEM(c->stack, t));
+        if (id < 0)
+            return -1;
+        if (id == TN_TABLE)
+            break;
+    }
+    if (t < 0)
+        return 0;
+    long mode = g_in_body;
+    Py_ssize_t bottom = t - 1;
+    Py_ssize_t upper = bottom - MAX_QUEUE_DEPTH;
+    if (upper < 0)
+        upper = 0;
+    for (Py_ssize_t pos = bottom; pos >= upper; pos--) {
+        int last = pos == upper;
+        if (last) {
+            PyObject *frag = PyObject_GetAttr(tb, s_fragment);
+            if (frag == NULL)
+                return -1;
+            int is_frag = PyObject_IsTrue(frag);
+            Py_DECREF(frag);
+            if (is_frag)
+                return 0;
+        }
+        int id = tn_el(PyList_GET_ITEM(c->stack, pos));
+        if (id < 0)
+            return -1;
+        if (id == TN_SELECT) { mode = g_in_select; break; }
+        if ((id == TN_TD || id == TN_TH) && !last) { mode = g_in_cell; break; }
+        if (id == TN_TR) { mode = g_in_row; break; }
+        if (TS_SECTIONS & TB(id)) { mode = g_in_table_body; break; }
+        if (id == TN_CAPTION) { mode = g_in_caption; break; }
+        if (id == TN_COLGROUP) { mode = g_in_column_group; break; }
+        if (id == TN_TABLE) { mode = g_in_table; break; }
+        if (id == TN_TEMPLATE)
+            return 0;
+        if (id == TN_HEAD && !last) { mode = g_in_head; break; }
+        if (id == TN_BODY) { mode = g_in_body; break; }
+        if (id == TN_FRAMESET) { mode = g_in_frameset; break; }
+        if (id == TN_HTML) {
+            PyObject *h = PyObject_GetAttr(tb, s_head_el);
+            if (h == NULL)
+                return -1;
+            mode = h == Py_None ? g_before_head : g_after_head;
+            Py_DECREF(h);
+            break;
+        }
+        if (last) { mode = g_in_body; break; }
+    }
+    if (PyList_SetSlice(c->stack, t, n, NULL) < 0)
+        return -1;
+    *state = mode;
+    return 1;
+}
+
+/* insert_element(t) for the current (not self-closing) start token */
+static int
+insert_start(Ctx *c, PyObject *token, RawTok *rt, PyObject *normal)
+{
+    PyObject *attrs;
+    if (rt != NULL) {
+        attrs = rt->attrs != NULL ? rt->attrs : Py_None;
+        Py_INCREF(attrs);
+    } else if ((attrs = TOK_ATTRS(token)) == NULL)
+        return -1;
+    int known;
+    long packed = action_of(normal, &known);
+    PyObject *el = packed < 0 ? NULL :
+        insert_element(c, normal, PACK_FLAGS(packed), attrs, 1);
+    Py_DECREF(attrs);
+    if (el == NULL)
+        return -1;
+    Py_DECREF(el);
+    return 0;
+}
+
+/* _exit_table_body: close the open section, then the same token again
+ * in InTable. 1 handled (error), 2 reprocess, 0 bail, -1 error. */
+static int
+exit_table_body(Ctx *c, long *state)
+{
+    int s = 0;
+    for (int id = TN_TBODY; id <= TN_TFOOT && !s; id++)
+        if ((s = in_scope_walk(c, g_tn[id], OPT_TABLE_SCOPE)) < 0)
+            return -1;
+    if (!s) {
+        err(c, g_err_body_not_in_table);
+        return 1;
+    }
+    int cl = clear_to_context(c, TS_SECTIONS);
+    if (cl <= 0)
+        return cl;
+    if (pop_top(c) < 0)
+        return -1;
+    *state = g_in_table;
+    return 2;
+}
+
+/* Returns 1 handled, 0 bail, -1 error, 2 = mode changed, reprocess the
+ * same token, 3 = apply the InBody rules (InCell anything-else). */
+static int
+table_phase(Ctx *c, PyObject *tb, PyObject *token, RawTok *rt, long ttype,
+            long *state)
+{
+    if (ttype == 3)
+        return 3;   /* comment: insert_comment in every table mode */
+    if (ttype == TOK_CHAR) {
+        if (*state == g_in_cell)
+            return 3;
+        /* whitespace between table tags: IN_TABLE_TEXT would buffer it
+         * and insert it at the current element on the next non-text
+         * token; inserting now gives the same tree */
+        int cur = tn_current(c);
+        if (cur < 0)
+            return -1;
+        if (!PyList_GET_SIZE(c->stack) || !(TS_FOSTER & TB(cur)))
+            return 0;
+        PyObject *data = rt != NULL ? rt->data : NULL;
+        if (data != NULL)
+            Py_INCREF(data);
+        else if ((data = TOK_DATA(token)) == NULL)
+            return -1;
+        int ok = PyUnicode_Check(data) && is_all_ws(data);
+        int rc = ok ? insert_text(c, data) : 0;
+        Py_DECREF(data);
+        return rc < 0 ? -1 : ok;
+    }
+    if (ttype != TOK_START && ttype != TOK_END)
+        return 0;
+    PyObject *normal = rt != NULL ? rt->normal : NULL;
+    if (normal != NULL)
+        Py_INCREF(normal);
+    else if ((normal = TOK_NORMAL(token)) == NULL)
+        return -1;
+    int id = tn_of(normal);
+    int rc = 0;
+    if (id < 0)
+        goto error;
+    unsigned bit = TB(id);
+
+    if (ttype == TOK_START) {
+        int selfc = rt != NULL ? rt->selfc : tok_selfc(token);
+        if (selfc < 0)
+            goto error;
+        if (PyList_GET_SIZE(c->stack) >= MAX_DEPTH - 1)
+            goto done;   /* bail */
+        if (*state == g_in_cell) {
+            if (!((TS_COLS | TS_SECTIONS | TS_CELLS | TB(TN_TR)) & bit)) {
+                rc = 3;
+                goto done;
+            }
+            int td = in_scope_walk(c, g_tn[TN_TD], OPT_TABLE_SCOPE);
+            int th = td ? 0 : in_scope_walk(c, g_tn[TN_TH], OPT_TABLE_SCOPE);
+            if (td < 0 || th < 0)
+                goto error;
+            if (!td && !th) {
+                err(c, g_err_no_cell);
+                rc = 1;
+                goto done;
+            }
+            if (close_cell(c, state) < 0)
+                goto error;
+            rc = 2;
+            goto done;
+        }
+        if (*state == g_in_row) {
+            if (TS_CELLS & bit) {
+                if (selfc)
+                    goto done;
+                int cl = clear_to_context(c, TB(TN_TR));
+                if (cl <= 0) { rc = cl; goto done; }
+                if (insert_start(c, token, rt, normal) < 0)
+                    goto error;
+                *state = g_in_cell;
+                if (PyList_Append(c->formatting, Py_None) < 0)
+                    goto error;
+                rc = 1;
+                goto done;
+            }
+            if ((TS_COLS | TS_SECTIONS | TB(TN_TR)) & bit) {
+                int s = in_scope_walk(c, g_tn[TN_TR], OPT_TABLE_SCOPE);
+                if (s < 0)
+                    goto error;
+                if (!s) {
+                    err(c, g_err_tr_not_in_scope);
+                    rc = 1;
+                    goto done;
+                }
+                int cl = clear_to_context(c, TB(TN_TR));
+                if (cl <= 0) { rc = cl; goto done; }
+                if (pop_top(c) < 0)
+                    goto error;
+                *state = g_in_table_body;
+                rc = 2;
+                goto done;
+            }
+        } else if (*state == g_in_table_body) {
+            if (id == TN_TR) {
+                if (selfc)
+                    goto done;
+                int cl = clear_to_context(c, TS_SECTIONS);
+                if (cl <= 0) { rc = cl; goto done; }
+                if (insert_start(c, token, rt, normal) < 0)
+                    goto error;
+                *state = g_in_row;
+                rc = 1;
+                goto done;
+            }
+            if (TS_CELLS & bit) {
+                int cl = clear_to_context(c, TS_SECTIONS);
+                if (cl <= 0) { rc = cl; goto done; }
+                err(c, g_err_cell_without_row);
+                if (insert_synth(c, TN_TR) < 0)
+                    goto error;
+                *state = g_in_row;
+                rc = 2;
+                goto done;
+            }
+            if ((TS_COLS | TS_SECTIONS) & bit) {
+                rc = exit_table_body(c, state);
+                goto done;
+            }
+        }
+        /* _in_table start rules (also the fallthrough of body/row) */
+        if (TS_SECTIONS & bit) {
+            if (selfc)
+                goto done;
+            int cl = clear_to_context(c, TB(TN_TABLE));
+            if (cl <= 0) { rc = cl; goto done; }
+            if (insert_start(c, token, rt, normal) < 0)
+                goto error;
+            *state = g_in_table_body;
+            rc = 1;
+            goto done;
+        }
+        if ((TS_CELLS | TB(TN_TR)) & bit) {
+            int cl = clear_to_context(c, TB(TN_TABLE));
+            if (cl <= 0) { rc = cl; goto done; }
+            if (insert_synth(c, TN_TBODY) < 0)
+                goto error;
+            *state = g_in_table_body;
+            rc = 2;
+            goto done;
+        }
+        goto done;   /* bail: caption/colgroup/col, table, foster, ... */
+    }
+
+    /* ---- end tags ---- */
+    if (*state == g_in_cell) {
+        if (TS_CELLS & bit) {
+            if (end_cell(c, normal, state) < 0)
+                goto error;
+            rc = 1;
+        } else if (TS_STRAY & bit) {
+            err(c, g_err_stray_end);
+            rc = 1;
+        } else if (TS_FOSTER & bit) {
+            int s = in_scope_walk(c, normal, OPT_TABLE_SCOPE);
+            if (s < 0)
+                goto error;
+            if (!s) {
+                err(c, g_err_not_in_scope);
+                rc = 1;
+            } else {
+                if (close_cell(c, state) < 0)
+                    goto error;
+                rc = 2;
+            }
+        } else
+            rc = 3;
+        goto done;
+    }
+    if (*state == g_in_row) {
+        if ((TB(TN_TR) | TB(TN_TABLE) | TS_SECTIONS) & bit) {
+            if (TS_SECTIONS & bit) {
+                int s = in_scope_walk(c, normal, OPT_TABLE_SCOPE);
+                if (s < 0)
+                    goto error;
+                if (!s) {
+                    err(c, g_err_not_in_scope);
+                    rc = 1;
+                    goto done;
+                }
+            }
+            int s = in_scope_walk(c, g_tn[TN_TR], OPT_TABLE_SCOPE);
+            if (s < 0)
+                goto error;
+            if (!s) {
+                if (!(TS_SECTIONS & bit))
+                    err(c, g_err_tr_not_in_scope);
+                rc = 1;
+                goto done;
+            }
+            int cl = clear_to_context(c, TB(TN_TR));
+            if (cl <= 0) { rc = cl; goto done; }
+            if (pop_top(c) < 0)
+                goto error;
+            *state = g_in_table_body;
+            rc = id == TN_TR ? 1 : 2;
+            goto done;
+        }
+        if ((TS_STRAY | TS_CELLS) & bit) {
+            err(c, g_err_stray_end);
+            rc = 1;
+            goto done;
+        }
+    } else if (*state == g_in_table_body) {
+        if (TS_SECTIONS & bit) {
+            int s = in_scope_walk(c, normal, OPT_TABLE_SCOPE);
+            if (s < 0)
+                goto error;
+            if (!s) {
+                err(c, g_err_not_in_scope);
+                rc = 1;
+                goto done;
+            }
+            int cl = clear_to_context(c, TS_SECTIONS);
+            if (cl <= 0) { rc = cl; goto done; }
+            if (pop_top(c) < 0)
+                goto error;
+            *state = g_in_table;
+            rc = 1;
+            goto done;
+        }
+        if (id == TN_TABLE) {
+            rc = exit_table_body(c, state);
+            goto done;
+        }
+        if ((TS_STRAY | TS_CELLS | TB(TN_TR)) & bit) {
+            err(c, g_err_stray_end);
+            rc = 1;
+            goto done;
+        }
+    }
+    /* _in_table end rules */
+    if (id == TN_TABLE) {
+        int s = in_scope_walk(c, normal, OPT_TABLE_SCOPE);
+        if (s < 0)
+            goto error;
+        if (!s) {
+            err(c, g_err_table_not_in_scope);
+            rc = 1;
+        } else
+            rc = end_table(c, tb, state);
+    } else if ((TS_STRAY | TS_SECTIONS | TS_CELLS | TB(TN_TR)) & bit) {
+        err(c, g_err_stray_table_end);
+        rc = 1;
+    }
+    /* else bail: </template>, foster */
+done:
+    Py_DECREF(normal);
+    return rc;
+error:
+    Py_DECREF(normal);
+    return -1;
+}
+
 static PyObject *
 apply(PyObject *self, PyObject *args)
 {
@@ -2692,13 +3269,7 @@ apply(PyObject *self, PyObject *args)
     long state = PyLong_AS_LONG(tmp);
     long entry_state = state;
     Py_DECREF(tmp);
-    if (state != g_in_body &&
-        !(g_in_head != -1 &&
-          (state == g_before_head || state == g_in_head ||
-           state == g_after_head || state == g_text_mode)) &&
-        !(g_initial != -1 &&
-          (state == g_initial || state == g_before_html ||
-           state == g_after_body || state == g_after_after_body)))
+    if (state != g_in_body && !is_head_mode(state) && !is_table_mode(state))
         goto bail_entry;
     /* trusted=1: the caller (treebuilder._run) has ALREADY gated on
      * noscript/track/on_close/tagset being inactive this iteration —
@@ -2786,7 +3357,20 @@ apply(PyObject *self, PyObject *args)
         if (ttype < 0)
             goto error_tok;
 
-        if (state != g_in_body) {
+        if (is_table_mode(state)) {
+            int trc = table_phase(&c, tb, token, rt, ttype, &state);
+            if (trc < 0)
+                goto error_tok;
+            if (trc == 1)
+                goto next_token;
+            if (trc == 2)
+                goto reprocess_token;
+            if (trc == 0)
+                goto bail_tok;
+            /* 3: the InBody rules, insertion mode unchanged (InCell) */
+        } else if (state != g_in_body) {
+            if (!is_head_mode(state))
+                goto bail_tok;
             if (rt != NULL) {
                 /* head_phase operates on real tokens (few per doc) */
                 token = rt_materialize(rt, pump_src);
@@ -3094,6 +3678,7 @@ apply(PyObject *self, PyObject *args)
                     g_tz_rawtext;
                 PyObject *tok_o = PyObject_GetAttr(tb, s_tok);
                 if (tok_o == NULL) goto error_start;
+                long orig_state = state;   /* InBody or InCell */
                 PyObject *tzv = PyLong_FromLong(tzstate);
                 PyObject *osv = PyLong_FromLong(state);
                 if (tzv == NULL || osv == NULL ||
@@ -3110,7 +3695,7 @@ apply(PyObject *self, PyObject *args)
                 {
                     int fr = fuse_text_content(&c, tb, normal, flags,
                                                tzstate == g_tz_rcdata,
-                                               &state, g_in_body);
+                                               &state, orig_state);
                     if (fr < 0) goto error_start;
                 }
                 break;
@@ -3176,6 +3761,39 @@ apply(PyObject *self, PyObject *args)
                     c.frameset_ok = 0;
                     c.frameset_dirty = 1;
                 }
+                break;
+            }
+            case SA_TABLE: {
+                /* treebuilder._in_body_start "table": close p in button
+                 * scope (not in quirks mode), insert, enter InTable */
+                if (g_in_table == -1) { handled = 0; break; }
+                PyObject *qm = PyObject_GetAttr(c.doc, s_quirks_mode);
+                if (qm == NULL) goto error_start;
+                int quirks = PyUnicode_Check(qm) &&
+                    PyUnicode_Compare(qm, g_quirks_str) == 0;
+                Py_DECREF(qm);
+                static PyObject *p_str5 = NULL;
+                if (p_str5 == NULL)
+                    p_str5 = PyUnicode_InternFromString("p");
+                int in_p = quirks ? 0 :
+                    in_scope_walk(&c, p_str5, OPT_SCOPE | OPT_BUTTON_SCOPE);
+                if (in_p < 0) goto error_start;
+                if (in_p) {
+                    if (implied_end(&c, p_str5) < 0) goto error_start;
+                    int cur = current_is(&c, p_str5);
+                    if (cur < 0) goto error_start;
+                    if (!cur)
+                        err(&c, g_err_unexpected_open);
+                    if (pop_to_close(&c, p_str5) < 0) goto error_start;
+                }
+                PyObject *el = insert_element(&c, normal, flags, attrs, 1);
+                if (el == NULL) goto error_start;
+                Py_DECREF(el);
+                if (c.frameset_ok) {
+                    c.frameset_ok = 0;
+                    c.frameset_dirty = 1;
+                }
+                state = g_in_table;
                 break;
             }
             case SA_HEADING: {
@@ -4397,6 +5015,8 @@ static PyMethodDef methods[] = {
      "resolve FastToken member offsets"},
     {"configure_prelude", configure_prelude, METH_VARARGS,
      "configure Initial/BeforeHtml prelude + AfterBody endgame"},
+    {"configure_table", configure_table, METH_VARARGS,
+     "configure_table(in_table, in_table_body, in_row, in_cell, in_select, in_caption, in_column_group, in_frameset, errs)"},
     {"configure_head", configure_head, METH_VARARGS,
      "configure_head(head_empty_set, resolve, DataNode, CData, before_head, in_head, after_head, text, rcdata, rawtext, scriptdata)"},
     {"configure_walk", configure_walk, METH_VARARGS,

@@ -66,18 +66,16 @@ DEFAULT = OutputSettings()
 _CSER = None
 if not os.environ.get("JSOUP_FASTSER_DISABLE"):
     try:
-        from .._native import jsoup_fastser as _mod
-
-        if hasattr(_mod, "serialize_pretty"):
-            _mod.configure(
-                Element, PseudoTextElement, Document, TextNode, CDataNode,
-                DataNode, CommentNode, DoctypeNode, XmlDeclNode,
-                tags._HTML_FLAGS, tags.TAG_FLAGS, NS_HTML, BOOLEAN_ATTRS,
-                tags.KNOWN, tags.VOID, tags.BLOCK, tags.INLINE_CONTAINER,
-                tags.SELF_CLOSE, tags.SEEN_SELF_CLOSE, tags.PRESERVE_WS)
-            _CSER = _mod
-    except ImportError:  # pragma: no cover - extension not built
-        _CSER = None
+        from .._native import jsoup_fastser as _CSER
+    except ImportError:  # pragma: no cover - no C compiler
+        pass
+    else:
+        _CSER.configure(
+            Element, PseudoTextElement, Document, TextNode, CDataNode,
+            DataNode, CommentNode, DoctypeNode, XmlDeclNode,
+            tags._HTML_FLAGS, tags.TAG_FLAGS, NS_HTML, BOOLEAN_ATTRS,
+            tags.KNOWN, tags.VOID, tags.BLOCK, tags.INLINE_CONTAINER,
+            tags.SELF_CLOSE, tags.SEEN_SELF_CLOSE, tags.PRESERVE_WS)
 
 
 def _c_eligible(settings: OutputSettings) -> bool:

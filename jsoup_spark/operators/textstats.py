@@ -182,9 +182,9 @@ def fingerprint_rolling(documents: DataFrame, k: int = 8,
                     grown[i] = prev
                 pows = grown
             for r, text in enumerate(texts):
-                # split('') on '' yields [''] and ascii('') is 0, so the
-                # empty doc hashes the single code 0 -> 0; NULL stays
-                # NULL (both probed vs the Catalyst formulation)
+                # Spark's split('', '') is an empty array, so the
+                # aggregate returns its 0 initializer for the empty doc;
+                # NULL stays NULL (both probed vs the Catalyst formulation)
                 if not text:
                     continue
                 codes = np.frombuffer(

@@ -531,11 +531,11 @@ class Element(Node):
         attrs = self.attrs
         attrs[key] = value
         t = attrs.__class__
-        if t is _CiAttrs or key != key.lower():
+        if t is not dict or key != key.lower():
             # keep the plain-dict all-lowercase invariant (attr() fast
-            # path) and rebuild the first-in-order fold after mutation
-            self.attrs = make_ci_attrs(
-                dict(attrs) if t is _CiAttrs else attrs)
+            # path); a marked dict may now collide ignore-case, so it is
+            # reclassified and any first-in-order fold rebuilt
+            self.attrs = make_ci_attrs(dict(attrs) if t is not dict else attrs)
         return self
 
     def remove_attr(self, key: str) -> "Element":

@@ -156,11 +156,13 @@ C_TABLE_TO_HEAD = frozenset(("script", "style", "template"))
 
 
 # ---------------------------------------------------------- C fast applier
-# Optional in-body token applier (jsoup_spark/_native/fasttree.c): applies
-# Character/simple-start/simple-end tokens directly in C while the builder
-# sits in InBody with no tracking/streaming/custom-tagset/formatting work
-# pending; bails back to this Python dispatcher (the source of truth) for
-# anything else. Validated by the golden + fuzz differential campaigns.
+# Optional token applier (jsoup_spark/_native/fasttree.c, compiled from
+# source on first import): applies tokens directly in C while the builder
+# sits in one of the _FT_STATES modes (document prelude, head, body, and
+# the table/body/row/cell modes) with no tracking/streaming/custom-tagset/
+# foster-parenting work pending; bails back to this Python dispatcher (the
+# source of truth) for anything else. Validated by the golden tests and
+# tests/test_tree_differential.py (C vs this dispatcher).
 
 def _build_fasttree_actions() -> dict:
     """normal name -> packed (start_act | end_act<<4 | opts<<8 | flags<<16)
@@ -168,13 +170,13 @@ def _build_fasttree_actions() -> dict:
     import sys as _sys
     SA_BAIL, SA_PLAIN_RECON, SA_P_CLOSER, SA_VOID_RECON, SA_MEDIA_EMPTY, \
         SA_UNKNOWN, SA_LI, SA_FORMATTING, SA_A, SA_HEADING, SA_INPUT, \
-        SA_TO_HEAD_EMPTY, SA_BUTTON, SA_TEXT_SWITCH = \
-        0, 1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13
+        SA_TO_HEAD_EMPTY, SA_BUTTON, SA_TEXT_SWITCH, SA_TABLE = \
+        0, 1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13, 14
     EA_BAIL, EA_CLOSER, EA_LI, EA_P, EA_ANY, EA_DD_DT, EA_FMT, \
         EA_HEADING, EA_BODY, EA_HTML = 0, 1, 2, 3, 4, 5, 6, 7, 8, 9
     start_bail = {
         "html", "body", "frameset", "form", "plaintext",
-        "nobr", "table", "hr", "image", "textarea", "xmp",
+        "nobr", "hr", "image", "textarea", "xmp",
         "iframe", "noembed", "noscript", "select", "math", "svg", "pre",
         "listing", "optgroup", "option", "rb", "rtc", "rp", "rt",
     }
@@ -208,6 +210,8 @@ def _build_fasttree_actions() -> dict:
             return SA_BAIL if "textswitch" in _disable else SA_TEXT_SWITCH
         if name == "span":
             return SA_PLAIN_RECON
+        if name == "table":
+            return SA_TABLE
         if name == "li":
             return SA_LI
         if name in start_bail or name in C_DD_DT:
@@ -1388,13 +1392,13 @@ def _merge_attributes(start, dest: Element) -> None:
     if added:
         # merged keys keep RAW case (reference semantics); reclassify so
         # the plain-dict all-lowercase invariant (Element.attr fast
-        # path) survives a mixed-case merge, and a _CiAttrs fold is
-        # rebuilt rather than left stale (r9)
-        from .nodes import _CiAttrs, make_ci_attrs
+        # path) survives a mixed-case merge; a marked dict may now collide
+        # ignore-case, so it is reclassified and any fold rebuilt
+        from .nodes import make_ci_attrs
         t = dest.attrs.__class__
-        if t is _CiAttrs or any(k != k.lower() for k in added):
+        if t is not dict or any(k != k.lower() for k in added):
             dest.attrs = make_ci_attrs(
-                dict(dest.attrs) if t is _CiAttrs else dest.attrs)
+                dict(dest.attrs) if t is not dict else dest.attrs)
     tok_ranges = getattr(start, "attr_ranges", None)
     if tok_ranges and added:
         # the reference finalizes staged ranges under NORMALIZED names but
@@ -2894,49 +2898,48 @@ if _FT is not None:
          "no matching element", "cannot close through special element",
          "nested heading", "no heading in scope"),
         IN_BODY, tags.DATA, _CommentNode)
-    if hasattr(_FT, "configure_head"):
-        from .nodes import CDataNode as _CDataNode, DataNode as _DataNode
-        from .nodes import resolve_url as _resolve_url
+    from . import tokenizer as _tz_mod
+    from .nodes import CDataNode as _CDataNode, DataNode as _DataNode
+    from .nodes import resolve_url as _resolve_url
 
-        _FT.configure_head(
-            C_IN_HEAD_EMPTY, _resolve_url, _DataNode, _CDataNode,
-            BEFORE_HEAD, IN_HEAD, AFTER_HEAD, TEXT,
-            tz.RCDATA, tz.RAWTEXT, tz.SCRIPT_DATA)
-        #: insertion modes the C applier may enter with
-        _FT_STATES = frozenset(
-            (IN_BODY, BEFORE_HEAD, IN_HEAD, AFTER_HEAD, TEXT))
-        if hasattr(_FT, "configure_tokens"):
-            from . import tokenizer as _tz_mod
-            if _tz_mod._C is not None:
-                _FT.configure_tokens(_tz_mod._C.FastToken)
-        if hasattr(_FT, "configure_pump"):
-            # C-side queue refill (pump-lite): one apply() call usually
-            # covers a whole document instead of one per tokenizer batch
-            _FT.configure_pump(tz._STATES, tz.Character)
-        if hasattr(_FT, "configure_scan"):
-            # full pump: apply() runs the Data-state scanner itself
-            # (struct tokens, no FastToken/deque round trip); same
-            # grammar + stop set as jsoup_fastscan, which remains the
-            # source of truth for the non-pump path
-            _FT.configure_scan(tz._BATCH_STOP, tz._decode_attr_value,
-                               tz.DATA)
-        if hasattr(_FT, "configure_prelude"):
-            _FT.configure_prelude(
-                C_END_OTHER_ERRORS,
-                # after-head start bails: real rules exist for these
-                # (frameset switch, misplaced head content, head error)
-                frozenset({"html", "head", "frameset"}) | C_TO_HEAD,
-                C_BEFORE_HTML_TO_HEAD,
-                # in-head start bails: html (InBody rules), noscript
-                # (noscript island), head (error+ignore), template
-                frozenset({"html", "noscript", "head", "template"}),
-                INITIAL, BEFORE_HTML, AFTER_BODY, AFTER_AFTER_BODY,
-                ("body not in scope", "no body open",
-                 "unexpected end tag", "unexpected end tag in head"))
-            _FT_STATES = _FT_STATES | frozenset(
-                (INITIAL, BEFORE_HTML, AFTER_BODY, AFTER_AFTER_BODY))
-    else:  # pragma: no cover - stale .so
-        _FT_STATES = frozenset((IN_BODY,))
+    _FT.configure_head(
+        C_IN_HEAD_EMPTY, _resolve_url, _DataNode, _CDataNode,
+        BEFORE_HEAD, IN_HEAD, AFTER_HEAD, TEXT,
+        tz.RCDATA, tz.RAWTEXT, tz.SCRIPT_DATA)
+    if _tz_mod._C is not None:
+        _FT.configure_tokens(_tz_mod._C.FastToken)
+    # C-side queue refill (pump-lite): one apply() call usually covers a
+    # whole document instead of one per tokenizer batch
+    _FT.configure_pump(tz._STATES, tz.Character)
+    # full pump: apply() runs the Data-state scanner itself (struct tokens,
+    # no FastToken/deque round trip); same grammar + stop set as
+    # jsoup_fastscan, which remains the source of truth for the non-pump
+    # path
+    _FT.configure_scan(tz._BATCH_STOP, tz._decode_attr_value, tz.DATA)
+    _FT.configure_prelude(
+        C_END_OTHER_ERRORS,
+        # after-head start bails: real rules exist for these (frameset
+        # switch, misplaced head content, head error)
+        frozenset({"html", "head", "frameset"}) | C_TO_HEAD,
+        C_BEFORE_HTML_TO_HEAD,
+        # in-head start bails: html (InBody rules), noscript (noscript
+        # island), head (error+ignore), template
+        frozenset({"html", "noscript", "head", "template"}),
+        INITIAL, BEFORE_HTML, AFTER_BODY, AFTER_AFTER_BODY,
+        ("body not in scope", "no body open",
+         "unexpected end tag", "unexpected end tag in head"))
+    _FT.configure_table(
+        IN_TABLE, IN_TABLE_BODY, IN_ROW, IN_CELL,
+        # reset_insertion_mode targets after </table>
+        IN_SELECT, IN_CAPTION, IN_COLUMN_GROUP, IN_FRAMESET,
+        ("no cell in scope", "cell not in scope", "stray end tag",
+         "tr not in scope", "cell without row", "table body not in scope",
+         "table not in scope", "stray table end tag"))
+    #: insertion modes the C applier may enter with
+    _FT_STATES = frozenset(
+        (IN_BODY, BEFORE_HEAD, IN_HEAD, AFTER_HEAD, TEXT,
+         INITIAL, BEFORE_HTML, AFTER_BODY, AFTER_AFTER_BODY,
+         IN_TABLE, IN_TABLE_BODY, IN_ROW, IN_CELL))
 else:
     _FT_STATES = frozenset()
 

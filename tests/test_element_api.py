@@ -233,3 +233,15 @@ def test_structural_pseudos_exclude_root():
     assert [e.name for e in select(doc, compile_query("*:only-child"))] == ["p"]
     assert [e.name for e in select(doc, compile_query("*:last-child"))] == \
         ["body", "p"]
+
+
+def test_set_attr_collision_on_preserved_case_attrs():
+    # a lowercase key added to a preserved-case dict can collide
+    # ignore-case with an existing key; attr() must then resolve
+    # first-in-order like the reference's getIgnoreCase
+    from jsoup_spark.parser.xmlbuilder import parse_xml
+    x = parse_xml('<root><x viewBox="1">q</x></root>').children[0].children[0]
+    x.set_attr("viewbox", "2")
+    assert list(x.attrs.items()) == [("viewBox", "1"), ("viewbox", "2")]
+    assert x.attr("viewbox") == "1"
+    assert x.attr("viewBox") == "1"

@@ -128,3 +128,15 @@ def test_preserve_case_attr_dedupe_sensitive():
     # tag-case-only settings still dedupe attrs ignore-case
     doc2 = parse('<p ID="1" id="2">x</p>', settings=ParseSettings(True, False))
     assert dict(doc2.body.children[0].attrs) == {"id": "1"}
+
+
+def test_merged_attr_collision_on_preserved_case_attrs():
+    # a second <html> merges its attributes into the first; with
+    # preserved case a merged lowercase key can collide ignore-case with
+    # an existing one, and attr() must resolve first-in-order
+    from jsoup_spark.parser.treebuilder import parse, PRESERVE_CASE
+    doc = parse('<html viewBox="1"><body><html viewbox="2">x',
+                settings=PRESERVE_CASE)
+    html = doc.children[0]
+    assert dict(html.attrs) == {"viewBox": "1", "viewbox": "2"}
+    assert html.attr("viewbox") == "1"

@@ -1,6 +1,6 @@
 """Large differential campaign across all op families; prints mismatches."""
-import base64, random, subprocess, sys, itertools
-sys.path.insert(0, "/root/repo")
+import base64, itertools, os, random, subprocess, sys
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from jsoup_spark.parser.treebuilder import parse, parse_fragment
 from jsoup_spark.parser.xmlbuilder import parse_xml
 from jsoup_spark.extract.canonical import canonical
